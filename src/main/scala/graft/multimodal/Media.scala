@@ -1493,7 +1493,15 @@ object Media {
     * zero-filled before every reuse, which is exactly a fresh
     * TYPE_INT_RGB image's state (opaque black), so the rendered
     * pixels — including alpha-source blends — are bit-identical to
-    * the old allocate-per-call path. */
+    * the old allocate-per-call path.
+    *
+    * Bounded: only destinations of at most [[ResampleCacheMaxPixels]]
+    * are cached — the 8x8 hash and sqrt(dim) patch sizes the hot
+    * kernels resample to — and at most [[ResampleCacheMaxEntries]] of
+    * them per thread (a full cache is cleared before the next insert).
+    * Larger `resizeImages` targets are allocated per call, so a
+    * long-lived session resizing to many large sizes holds no large
+    * image per pooled thread. */
   private val resampleDst =
     new ThreadLocal[java.util.HashMap[java.lang.Long, java.awt.image.BufferedImage]] {
       override def initialValue():
@@ -1501,21 +1509,38 @@ object Media {
         new java.util.HashMap()
     }
 
+  /** Largest destination (w * h pixels) [[resample]] keeps per thread:
+    * 64 x 64, the patch of a 4096-dim embedding; 16 KB as int pixels. */
+  private[multimodal] val ResampleCacheMaxPixels = 64 * 64
+  private[multimodal] val ResampleCacheMaxEntries = 4
+
+  /** Pixels of the destinations the calling thread keeps cached. */
+  private[multimodal] def resampleCachedPixels: Long = {
+    var n = 0L
+    resampleDst.get().values().forEach(img => n += img.getWidth.toLong * img.getHeight)
+    n
+  }
+
   /** Headless resample to w x h via Graphics2D (BufferedImage targets
-    * never need a display). The returned image is the calling thread's
-    * REUSED per-size destination ([[resampleDst]]): it is valid only
-    * until the thread's next `resample` call with the same (w, h) —
-    * every caller consumes the pixels (hash/patch/PNG-encode) before
-    * its row function returns, which is the contract. */
-  private def resample(img: java.awt.image.BufferedImage, w: Int, h: Int)
+    * never need a display). A destination of at most
+    * [[ResampleCacheMaxPixels]] is the calling thread's REUSED per-size
+    * image ([[resampleDst]]): it is valid only until the thread's next
+    * `resample` call with the same (w, h) — every caller consumes the
+    * pixels (hash/patch/PNG-encode) before its row function returns,
+    * which is the contract. A larger destination is a fresh image. */
+  private[multimodal] def resample(img: java.awt.image.BufferedImage, w: Int, h: Int)
       : java.awt.image.BufferedImage = {
+    val cacheable = w.toLong * h <= ResampleCacheMaxPixels
     val key = java.lang.Long.valueOf((w.toLong << 32) | (h.toLong & 0xffffffffL))
     val cache = resampleDst.get()
-    var out = cache.get(key)
+    var out = if (cacheable) cache.get(key) else null
     if (out == null) {
       out = new java.awt.image.BufferedImage(
         w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      cache.put(key, out)
+      if (cacheable) {
+        if (cache.size >= ResampleCacheMaxEntries) cache.clear()
+        cache.put(key, out)
+      }
     } else {
       java.util.Arrays.fill(out.getRaster.getDataBuffer
         .asInstanceOf[java.awt.image.DataBufferInt].getData, 0)

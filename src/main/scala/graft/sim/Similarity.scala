@@ -1,9 +1,15 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+  StructType}
 
 /** Similarity search over embedding columns (Array[Float]).
   *
@@ -16,6 +22,15 @@ import org.apache.spark.sql.graftbridge.Bridge
   *  - [[ivfAssign]]/[[ivfSearch]] partition the corpus into cells
   *    (inverted file); queries probe only the closest cells, cutting the
   *    scanned fraction to nProbe/k at 100 TB corpus scale.
+  *
+  * Request-shaped traffic: a query frame whose optimized plan is a
+  * `LocalRelation` (`createDataFrame` of a few rows, `Seq(...).toDF`)
+  * is already on the driver, so the broadcast operators read its size
+  * off the plan instead of running a limit+count job, and
+  * [[ivfSearch]] ranks its probe cells on the driver: one query
+  * against a local centroid frame is at most 2 Spark jobs, all of them
+  * when the result is executed. Every other query frame keeps the
+  * all-DataFrame plan.
   */
 object Similarity {
 
@@ -29,6 +44,22 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+
+  /** Rows of a frame whose optimized plan is a driver-held
+    * `LocalRelation` — read off the plan, no job; None for any other
+    * plan. Projections and filters of local rows fold into the relation
+    * during optimization, so they count as local too. */
+  private def localRowCount(df: DataFrame): Option[Int] =
+    df.queryExecution.optimizedPlan match {
+      case lr: LocalRelation => Some(lr.data.size)
+      case _ => None
+    }
+
+  /** The size guard of the operators that broadcast a side: the row
+    * count of `df` when it is local, otherwise counted up to `cap + 1`
+    * by one limit+count job, which is enough to compare with `cap`. */
+  private def cappedCount(df: DataFrame, cap: Int): Long =
+    localRowCount(df).fold(df.limit(cap + 1).count())(_.toLong)
 
   /** Exact top-k cosine neighbors for each query vector.
     *
@@ -48,7 +79,7 @@ object Similarity {
   def cosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, maxQueries: Int = 10000,
       excludeSelf: Boolean = true): DataFrame = {
-    val nQ = queries.limit(maxQueries + 1).count()
+    val nQ = cappedCount(queries, maxQueries)
     require(nQ <= maxQueries,
       s"cosineTopK is the exact brute-force baseline; query set exceeds " +
         s"maxQueries=$maxQueries — use srpCandidates/ivfSearch for large batches")
@@ -226,17 +257,44 @@ object Similarity {
   }
 
   /** ANN search through the IVF index: probe the nProbe closest cells
-    * per query, then brute-force only within those cells.
+    * per query, then brute-force only within those cells. Returns
+    * (query_id, cand_id, score): per query the top k candidates by 4-dp
+    * rounded cosine descending, then cand_id. Probe cells rank by
+    * cosine to the centroid descending, then cell id.
     *
     * The probed (query x cell) set — full query vectors included — is
     * broadcast to every corpus partition, so like [[cosineTopK]] this
     * carries an explicit size contract: `maxProbedRows` bounds
-    * |queries| * nProbe up front (one cheap limit+count on the query
-    * side) instead of OOMing the driver on the broadcast. Larger query
-    * batches should be split, or joined without the broadcast hint. */
+    * |queries| * nProbe up front instead of OOMing the driver on the
+    * broadcast. A larger batch joins without the broadcast hint.
+    *
+    * Two plans, the same answers bit for bit:
+    *  - Local query frame (optimized plan a `LocalRelation`: a request
+    *    built with `createDataFrame` or `Seq(...).toDF`). Its rows and
+    *    the centroid rows are collected; a local centroid frame, such as
+    *    [[kmeansCentroids]] returns, collects without a job. Each
+    *    query's probe cells are ranked on the driver with the same
+    *    [[Dot]] kernel and arithmetic as the frame plan and Spark's
+    *    double ordering (NaN above every number), and the probe set
+    *    joins the index as a local frame. A single query takes its top
+    *    k with one ordered take, no shuffle: with a local centroid frame
+    *    that is 2 Spark jobs, none of them before the result is
+    *    executed. A batch keeps the per-query window. A null or zero-norm vector, or a cell id that is not an
+    *    integer, leaves the ranking to the frame plan, so Spark's
+    *    division semantics (null, or the ANSI error) hold unchanged.
+    *  - Any other query frame (a parquet scan, a filter of one): one
+    *    limit+count job sizes the batch up front, and a broadcast cross
+    *    join with the centroids plus a per-query window ranks the cells.
+    *
+    * Identity contract as in [[cosineTopK]]: with `excludeSelf=true`
+    * (default) a candidate whose id equals the query's id is dropped,
+    * the right behavior when queries are drawn from the indexed corpus
+    * itself. For external query vectors whose ids merely coincide with
+    * corpus ids, pass `excludeSelf=false` (or namespace the query ids),
+    * otherwise a valid nearest neighbor is silently excluded. */
   def ivfSearch(indexed: DataFrame, centroids: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int,
-      maxProbedRows: Int = 100000): DataFrame = {
+      maxProbedRows: Int = 100000, excludeSelf: Boolean = true): DataFrame = {
     // The probe set (query vectors x nProbe cells) is broadcast when it
     // fits the size contract — one hash join, no shuffle of the corpus.
     // A larger batch falls back to a shuffle join keyed on the cell id:
@@ -244,25 +302,80 @@ object Similarity {
     // driver-size limit applies. Same results either way; the switch is
     // the same class of decision AQE makes for join strategies.
     val maxQ = math.max(1, maxProbedRows / math.max(1, nProbe))
-    val smallBatch = queries.limit(maxQ + 1).count() <= maxQ
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("qv"))
     val cent = centroids.select(col(idCol).as("cell"),
       col(vecCol).cast("array<double>").as("cv"))
-    val qCells = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("qv"), col("cell"),
-        cosine(col("qv"), col("cv")).as("sim"))
-    val wq = Window.partitionBy("query_id").orderBy(desc("sim"), col("cell"))
-    val probed = qCells.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe).select("query_id", "qv", "cell")
-    val probeSide = if (smallBatch) broadcast(probed) else probed
+    val onDriver =
+      if (localRowCount(q).isEmpty) None else rankProbesOnDriver(q, cent, nProbe)
+    val (probed, nQ) = onDriver.getOrElse {
+      val nQ = cappedCount(queries, maxQ)
+      val qCells = q.crossJoin(broadcast(cent))
+        .select(col("query_id"), col("qv"), col("cell"),
+          cosine(col("qv"), col("cv")).as("sim"))
+      val wq = Window.partitionBy("query_id").orderBy(desc("sim"), col("cell"))
+      (qCells.withColumn("rn", row_number().over(wq))
+        .filter(col("rn") <= nProbe).select("query_id", "qv", "cell"), nQ)
+    }
+    val probeSide = if (nQ <= maxQ) broadcast(probed) else probed
     val cands = indexed.join(probeSide, Seq("cell"))
-      .filter(col(idCol) =!= col("query_id"))
+      .filter(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
       .select(col("query_id"), col(idCol).as("cand_id"),
         round(cosine(col("qv"), col("v")), 4).as("score"))
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), col("cand_id"))
-    cands.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .drop("rn")
+    if (onDriver.isDefined && nQ == 1)
+      cands.orderBy(desc("score"), col("cand_id")).limit(k)
+    else {
+      val w = Window.partitionBy("query_id").orderBy(desc("score"), col("cand_id"))
+      cands.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+        .drop("rn")
+    }
+  }
+
+  /** The probe set of a local query batch, ranked on the driver, and
+    * the batch size: (query_id, qv, cell) rows as a local frame. The
+    * per-query order is the frame plan's window order — cosine
+    * descending under Spark's double ordering (NaN above every number,
+    * -0.0 equal to 0.0), then cell id — and the cosine is the frame
+    * plan's `dot(q, c) / (sqrt(dot(q, q)) * sqrt(dot(c, c)))` on the
+    * same [[VecKernels.dot]], so the bits agree. The probe cells are
+    * data, not literals: every request compiles to the same code.
+    * None when a cosine is undefined (null or zero-norm vector) or a
+    * cell id is not a non-null integer. */
+  private def rankProbesOnDriver(q: DataFrame, cent: DataFrame,
+      nProbe: Int): Option[(DataFrame, Long)] = {
+    val integralCell = Seq(ByteType, ShortType, IntegerType, LongType)
+      .contains(cent.schema("cell").dataType)
+    val queryRows = q.collect()
+    val cellRows = if (integralCell) cent.collect() else Array.empty[Row]
+    val undefined = !integralCell ||
+      cellRows.exists(r => r.isNullAt(0) || r.isNullAt(1)) ||
+      queryRows.exists(_.isNullAt(1))
+    if (undefined) return None
+    def vec(r: Row) = new GenericArrayData(r.getSeq[Double](1).toArray)
+    val cellIds = cellRows.map(_.getAs[Number](0).longValue)
+    val cvs = cellRows.map(vec)
+    val cNorms = cvs.map(cv => math.sqrt(VecKernels.dot(cv, cv)))
+    // (dot, norm product) per (query, cell); Spark divides only by a
+    // non-zero norm product (null, or the ANSI error, otherwise)
+    val terms = queryRows.map { r =>
+      val qv = vec(r)
+      val qNorm = math.sqrt(VecKernels.dot(qv, qv))
+      cvs.indices.map(i => (VecKernels.dot(qv, cvs(i)), qNorm * cNorms(i)))
+    }
+    if (terms.exists(_.exists(_._2 == 0.0))) return None
+    val probes = queryRows.indices.flatMap { qi =>
+      val sim = terms(qi).map { case (d, n) => d / n }
+      cvs.indices
+        .sortWith { (a, b) =>
+          val c = SQLOrderingUtil.compareDoubles(sim(b), sim(a))
+          if (c != 0) c < 0 else cellIds(a) < cellIds(b)
+        }
+        .take(nProbe)
+        .map(i => Row(queryRows(qi).get(0), queryRows(qi).get(1), cellRows(i).get(0)))
+    }
+    val schema = StructType(Seq(q.schema("query_id"), q.schema("qv"),
+      cent.schema("cell")))
+    Some((q.sparkSession.createDataFrame(probes.asJava, schema), queryRows.length.toLong))
   }
 
   // ---- product quantization (PQ) -------------------------------------------
@@ -876,7 +989,7 @@ object Similarity {
       maxBench: Int = 100000): DataFrame = {
     require(minCosine > 0 && minCosine <= 1,
       s"minCosine must be in (0, 1], got $minCosine")
-    val nB = bench.limit(maxBench + 1).count()
+    val nB = cappedCount(bench, maxBench)
     require(nB <= maxBench,
       s"semanticDecontaminateReport broadcasts the benchmark; it exceeds " +
         s"maxBench=$maxBench — pre-bucket with srpCandidates instead")
@@ -936,7 +1049,7 @@ object Similarity {
     require(k > 0, s"k must be positive, got $k")
     require(minCosine < maxCosine,
       s"band is [minCosine, maxCosine): got [$minCosine, $maxCosine)")
-    val nQ = queries.limit(maxQueries + 1).count()
+    val nQ = cappedCount(queries, maxQueries)
     require(nQ <= maxQueries,
       s"hardNegatives broadcasts the anchor set; it exceeds " +
         s"maxQueries=$maxQueries — route candidates through ivfSearch")

@@ -715,4 +715,30 @@ class MediaSpec extends AnyFunSuite {
       assert(d <= 16, s"within-class pHash distance blew up: $d")
     }
   }
+
+  test("resample keeps a small per-thread cache and the same pixels") {
+    val src = new java.awt.image.BufferedImage(37, 23,
+      java.awt.image.BufferedImage.TYPE_INT_ARGB)
+    for (x <- 0 until 37; y <- 0 until 23)
+      src.setRGB(x, y, (x * 7 + y * 13) * 0x010203 | ((x * y) % 256) << 24)
+    def pixels(img: java.awt.image.BufferedImage) =
+      img.getRGB(0, 0, img.getWidth, img.getHeight, null, 0, img.getWidth).toSeq
+    val bound = Media.ResampleCacheMaxEntries.toLong * Media.ResampleCacheMaxPixels
+    // many large targets are allocated per call: none stays cached
+    val before = Media.resampleCachedPixels
+    (0 until 12).foreach(i => Media.resample(src, 320 + 97 * i, 200 + 61 * i))
+    assert(Media.resampleCachedPixels == before)
+    // many small targets stay within the entry cap
+    (1 to 40).foreach(s => Media.resample(src, s, s))
+    assert(Media.resampleCachedPixels <= bound)
+    // a reused small destination renders what a fresh one does
+    val first = pixels(Media.resample(src, 8, 8))
+    Media.resample(new java.awt.image.BufferedImage(5, 5,
+      java.awt.image.BufferedImage.TYPE_INT_RGB), 8, 8)
+    val reused = Media.resample(src, 8, 8)
+    assert(reused eq Media.resample(src, 8, 8))
+    assert(pixels(reused) == first)
+    assert(pixels(Media.resample(src, 640, 480)) ==
+      pixels(Media.resample(src, 640, 480)))
+  }
 }

@@ -1,6 +1,15 @@
 package graft.sim
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -573,5 +582,161 @@ class SimilaritySpec extends AnyFunSuite {
     assert(worstKept.join(worstDrop, "cell")
       .filter(col("mk") > col("md")).count() == 0,
       "every dropped row is at least as prototypical as every kept row")
+  }
+
+  // ---- ivfSearch: local query frames ranked on the driver -------------------
+
+  /** Four axis-aligned cells in 4-d; corpus member i sits in cell i % 4,
+    * tilted towards the next axis by i / 4 tenths. Ids 24..26 repeat
+    * member 4's vector, so their scores tie with it exactly. */
+  private lazy val ivfFixture = {
+    import spark.implicits._
+    val axis = (c: Int) => Array.tabulate(4)(d => if (d == c) 1.0f else 0.0f)
+    val member = (i: Int) => {
+      val v = axis(i % 4)
+      v((i % 4 + 1) % 4) = 0.1f * (i / 4)
+      v
+    }
+    val corpus = ((0 until 24).map(i => (i.toLong, member(i))) ++
+      (24 until 27).map(i => (i.toLong, member(4)))).toDF("vec_id", "embedding")
+    val centroids = (0 until 4).map(c => (c.toLong, axis(c)))
+      .toDF("vec_id", "embedding")
+    (Similarity.ivfAssign(corpus, centroids, "vec_id", "embedding").cache(),
+      centroids, corpus)
+  }
+
+  private val querySchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("embedding", ArrayType(FloatType, containsNull = false))))
+
+  /** A local query frame (its optimized plan is a LocalRelation). */
+  private def localQueries(qs: (Long, Array[Float])*): DataFrame =
+    spark.createDataFrame(qs.map { case (id, v) => Row(id, v.toSeq) }.asJava,
+      querySchema)
+
+  /** (query_id, cand_id, score bits) of an ivfSearch answer. */
+  private def ivfHits(queries: DataFrame, k: Int, nProbe: Int,
+      excludeSelf: Boolean = true): (StructType, Set[(Long, Long, Option[Long])]) = {
+    val (indexed, centroids, _) = ivfFixture
+    val res = Similarity.ivfSearch(indexed, centroids, queries, "vec_id",
+      "embedding", k = k, nProbe = nProbe, excludeSelf = excludeSelf)
+    (res.schema, res.collect().map(r => (r.getLong(0), r.getLong(1),
+      Option(r.get(2)).map(d => java.lang.Double.doubleToRawLongBits(
+        d.asInstanceOf[Double])))).toSet)
+  }
+
+  /** The local frame and the same rows behind a repartition (not
+    * local) must give identical schemas and answers. */
+  private def assertSameOnBothPaths(local: DataFrame, k: Int, nProbe: Int,
+      excludeSelf: Boolean = true): Set[(Long, Long, Option[Long])] = {
+    val onDriver = ivfHits(local, k, nProbe, excludeSelf)
+    val inFrames = ivfHits(local.repartition(2), k, nProbe, excludeSelf)
+    assert(onDriver == inFrames, s"k=$k nProbe=$nProbe")
+    onDriver._2
+  }
+
+  private val oneQuery = Seq(100L -> Array(0.9f, 0.3f, 0.1f, 0.0f))
+  private val fiveQueries = oneQuery ++ Seq(
+    101L -> Array(0.1f, 1.0f, 0.2f, 0.0f),
+    102L -> Array(0.0f, 0.2f, 0.3f, 1.0f),
+    // equidistant from cells 0 and 1: the cell tie breaks on cell id
+    103L -> Array(1.0f, 1.0f, 0.0f, 0.0f),
+    // collides with corpus id 3
+    3L -> Array(0.0f, 0.0f, 0.0f, 1.0f))
+
+  test("ivfSearch: local and non-local query frames give identical answers") {
+    for (qs <- Seq(oneQuery, fiveQueries); nProbe <- Seq(1, 4, 6); k <- Seq(3, 100)) {
+      val hits = assertSameOnBothPaths(localQueries(qs: _*), k, nProbe)
+      assert(hits.map(_._1) == qs.map(_._1).toSet)
+      // k above the candidate count returns every probed candidate
+      if (k == 100 && nProbe >= 4) assert(hits.count(_._1 == 100L) == 27)
+    }
+  }
+
+  test("ivfSearch: tied scores break on cand_id on both paths") {
+    // member 4 and its copies 24..26 tie; k = 2 cuts through the tie
+    val q = localQueries(200L -> Array(1.0f, 0.1f, 0.0f, 0.0f))
+    val hits = assertSameOnBothPaths(q, k = 2, nProbe = 1)
+    assert(hits.map(_._2) == Set(4L, 24L))
+  }
+
+  test("ivfSearch: zero-norm and NaN query vectors behave alike on both paths") {
+    // a zero norm leaves the cell ranking to Spark's division (null, or
+    // the ANSI error); NaN cosines sort above every number
+    for (v <- Seq(Array(0.0f, 0.0f, 0.0f, 0.0f), Array(Float.NaN, 1.0f, 0.0f, 0.0f))) {
+      val local = localQueries(300L -> v)
+      val a = Try(ivfHits(local, 5, 2))
+      val b = Try(ivfHits(local.repartition(2), 5, 2))
+      assert(a.isSuccess == b.isSuccess, s"$a vs $b")
+      if (a.isSuccess) assert(a.get == b.get)
+      else assert(a.failed.get.getClass == b.failed.get.getClass)
+    }
+  }
+
+  test("ivfSearch: an empty local query frame gives an empty answer, same schema") {
+    val empty = localQueries()
+    val (schema, hits) = ivfHits(empty, 5, 2)
+    assert(hits.isEmpty)
+    assert(schema == ivfHits(empty.repartition(2), 5, 2)._1)
+  }
+
+  test("ivfSearch excludeSelf=false keeps a corpus row whose id equals the query's") {
+    // query 3 is external: corpus row 3 (cell 3) is a true neighbour
+    val q = localQueries(3L -> Array(0.0f, 0.0f, 0.0f, 1.0f))
+    val dropped = assertSameOnBothPaths(q, k = 10, nProbe = 1)
+    val kept = assertSameOnBothPaths(q, k = 10, nProbe = 1, excludeSelf = false)
+    assert(!dropped.exists(_._2 == 3L))
+    assert(kept.exists(_._2 == 3L))
+  }
+
+  /** Runs `body` and counts the Spark jobs it starts. Listener events
+    * arrive asynchronously but in order, so once a sentinel job started
+    * after `body` is seen, every job of `body` has been counted. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val sentinel = "ivf-job-count-sentinel"
+    val started = new AtomicInteger(0)
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
+          sentinelSeen.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "sentinel job never seen")
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a local query frame starts no job at call time; one ivfSearch query runs <= 2 jobs") {
+    val (indexed, centroids, corpus) = ivfFixture
+    indexed.count() // the cached index is built outside the measured calls
+    val q = localQueries(oneQuery: _*)
+    val (res, atCall) = jobsOf(Similarity.ivfSearch(indexed, centroids, q,
+      "vec_id", "embedding", k = 3, nProbe = 2))
+    assert(atCall == 0, s"ivfSearch started $atCall jobs before execution")
+    val (_, topAtCall) = jobsOf(Similarity.cosineTopK(corpus, q, "vec_id", "embedding", 3))
+    assert(topAtCall == 0, s"cosineTopK started $topAtCall jobs before execution")
+    val (rows, atCollect) = jobsOf(res.collect())
+    assert(rows.length == 3)
+    assert(atCollect <= 2, s"one query ran $atCollect jobs")
+  }
+
+  test("the size guards count a local frame exactly and keep their errors") {
+    val qs = localQueries(fiveQueries: _*)
+    val (_, _, corpus) = ivfFixture
+    val local = intercept[IllegalArgumentException](
+      Similarity.cosineTopK(corpus, qs, "vec_id", "embedding", 3, maxQueries = 4))
+    val counted = intercept[IllegalArgumentException](Similarity.cosineTopK(
+      corpus, qs.repartition(2), "vec_id", "embedding", 3, maxQueries = 4))
+    assert(local.getMessage == counted.getMessage)
+    assert(local.getMessage.contains("maxQueries=4"))
+    assert(Similarity.cosineTopK(corpus, qs, "vec_id", "embedding", 3,
+      maxQueries = 5).count() == 15)
   }
 }
