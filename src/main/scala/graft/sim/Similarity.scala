@@ -48,12 +48,17 @@ object Similarity {
   /** Rows of a frame whose optimized plan is a driver-held
     * `LocalRelation` — read off the plan, no job; None for any other
     * plan. Projections and filters of local rows fold into the relation
-    * during optimization, so they count as local too. */
-  private def localRowCount(df: DataFrame): Option[Int] =
-    df.queryExecution.optimizedPlan match {
+    * during optimization, so they count as local too. A frame with any
+    * other leaf (a file scan, an RDD) is not optimized here at all: its
+    * analyzed plan, built with the frame, already rules it out. */
+  private def localRowCount(df: DataFrame): Option[Int] = {
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else qe.optimizedPlan match {
       case lr: LocalRelation => Some(lr.data.size)
       case _ => None
     }
+  }
 
   /** The size guard of the operators that broadcast a side: the row
     * count of `df` when it is local, otherwise counted up to `cap + 1`
@@ -279,22 +284,22 @@ object Similarity {
     *    joins the index as a local frame. A single query takes its top
     *    k with one ordered take, no shuffle: with a local centroid frame
     *    that is 2 Spark jobs, none of them before the result is
-    *    executed. A batch keeps the per-query window. A null or zero-norm vector, or a cell id that is not an
-    *    integer, leaves the ranking to the frame plan, so Spark's
-    *    division semantics (null, or the ANSI error) hold unchanged.
+    *    executed. A batch keeps the per-query window. A null or
+    *    zero-norm vector, or a cell id that is not an integer, leaves
+    *    the ranking to the frame plan, so Spark's division semantics
+    *    (null, or the ANSI error) hold unchanged.
     *  - Any other query frame (a parquet scan, a filter of one): one
     *    limit+count job sizes the batch up front, and a broadcast cross
     *    join with the centroids plus a per-query window ranks the cells.
     *
-    * Identity contract as in [[cosineTopK]]: with `excludeSelf=true`
-    * (default) a candidate whose id equals the query's id is dropped,
-    * the right behavior when queries are drawn from the indexed corpus
-    * itself. For external query vectors whose ids merely coincide with
-    * corpus ids, pass `excludeSelf=false` (or namespace the query ids),
-    * otherwise a valid nearest neighbor is silently excluded. */
+    * A candidate whose id equals the query's id is always dropped, the
+    * right behavior when queries are drawn from the indexed corpus
+    * itself. External query vectors need ids that do not collide with
+    * corpus ids (offset or namespace them), otherwise a valid nearest
+    * neighbor is silently excluded. */
   def ivfSearch(indexed: DataFrame, centroids: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int,
-      maxProbedRows: Int = 100000, excludeSelf: Boolean = true): DataFrame = {
+      maxProbedRows: Int = 100000): DataFrame = {
     // The probe set (query vectors x nProbe cells) is broadcast when it
     // fits the size contract — one hash join, no shuffle of the corpus.
     // A larger batch falls back to a shuffle join keyed on the cell id:
@@ -306,10 +311,11 @@ object Similarity {
       col(vecCol).cast("array<double>").as("qv"))
     val cent = centroids.select(col(idCol).as("cell"),
       col(vecCol).cast("array<double>").as("cv"))
+    val local = localRowCount(q)
     val onDriver =
-      if (localRowCount(q).isEmpty) None else rankProbesOnDriver(q, cent, nProbe)
+      if (local.isEmpty) None else rankProbesOnDriver(q, cent, nProbe)
     val (probed, nQ) = onDriver.getOrElse {
-      val nQ = cappedCount(queries, maxQ)
+      val nQ = local.fold(queries.limit(maxQ + 1).count())(_.toLong)
       val qCells = q.crossJoin(broadcast(cent))
         .select(col("query_id"), col("qv"), col("cell"),
           cosine(col("qv"), col("cv")).as("sim"))
@@ -319,7 +325,7 @@ object Similarity {
     }
     val probeSide = if (nQ <= maxQ) broadcast(probed) else probed
     val cands = indexed.join(probeSide, Seq("cell"))
-      .filter(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
+      .filter(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol).as("cand_id"),
         round(cosine(col("qv"), col("v")), 4).as("score"))
     if (onDriver.isDefined && nQ == 1)

@@ -615,11 +615,11 @@ class SimilaritySpec extends AnyFunSuite {
       querySchema)
 
   /** (query_id, cand_id, score bits) of an ivfSearch answer. */
-  private def ivfHits(queries: DataFrame, k: Int, nProbe: Int,
-      excludeSelf: Boolean = true): (StructType, Set[(Long, Long, Option[Long])]) = {
+  private def ivfHits(queries: DataFrame, k: Int,
+      nProbe: Int): (StructType, Set[(Long, Long, Option[Long])]) = {
     val (indexed, centroids, _) = ivfFixture
     val res = Similarity.ivfSearch(indexed, centroids, queries, "vec_id",
-      "embedding", k = k, nProbe = nProbe, excludeSelf = excludeSelf)
+      "embedding", k = k, nProbe = nProbe)
     (res.schema, res.collect().map(r => (r.getLong(0), r.getLong(1),
       Option(r.get(2)).map(d => java.lang.Double.doubleToRawLongBits(
         d.asInstanceOf[Double])))).toSet)
@@ -627,10 +627,10 @@ class SimilaritySpec extends AnyFunSuite {
 
   /** The local frame and the same rows behind a repartition (not
     * local) must give identical schemas and answers. */
-  private def assertSameOnBothPaths(local: DataFrame, k: Int, nProbe: Int,
-      excludeSelf: Boolean = true): Set[(Long, Long, Option[Long])] = {
-    val onDriver = ivfHits(local, k, nProbe, excludeSelf)
-    val inFrames = ivfHits(local.repartition(2), k, nProbe, excludeSelf)
+  private def assertSameOnBothPaths(local: DataFrame, k: Int,
+      nProbe: Int): Set[(Long, Long, Option[Long])] = {
+    val onDriver = ivfHits(local, k, nProbe)
+    val inFrames = ivfHits(local.repartition(2), k, nProbe)
     assert(onDriver == inFrames, s"k=$k nProbe=$nProbe")
     onDriver._2
   }
@@ -680,13 +680,11 @@ class SimilaritySpec extends AnyFunSuite {
     assert(schema == ivfHits(empty.repartition(2), 5, 2)._1)
   }
 
-  test("ivfSearch excludeSelf=false keeps a corpus row whose id equals the query's") {
-    // query 3 is external: corpus row 3 (cell 3) is a true neighbour
+  test("ivfSearch drops the corpus row whose id equals the query's on both paths") {
+    // corpus row 3 sits in cell 3, the one cell this query probes
     val q = localQueries(3L -> Array(0.0f, 0.0f, 0.0f, 1.0f))
-    val dropped = assertSameOnBothPaths(q, k = 10, nProbe = 1)
-    val kept = assertSameOnBothPaths(q, k = 10, nProbe = 1, excludeSelf = false)
-    assert(!dropped.exists(_._2 == 3L))
-    assert(kept.exists(_._2 == 3L))
+    val hits = assertSameOnBothPaths(q, k = 10, nProbe = 1)
+    assert(hits.nonEmpty && !hits.exists(_._2 == 3L))
   }
 
   /** Runs `body` and counts the Spark jobs it starts. Listener events
